@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness (driver contract): times the headline `bench=true`
   * queries from SparkEntry at SPARK_GRAFT_SF_DIR, printing ONE JSON
@@ -134,15 +133,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.localSession()
     // Stats-bearing catalog tables + CBO for the bench session: the
     // star-join queries then plan with real rowCount/NDV (join reorder,
     // build-side choice) instead of file-size heuristics — the same
@@ -281,7 +272,7 @@ object Bench {
       // discarded (every wall lands in the published `runs` array and
       // the suspect flag still sees them); a query with one clean run
       // among its first three triggers nothing.
-      val nCores = cpus.toDouble
+      val nCores = spark.sparkContext.defaultParallelism.toDouble
       var extraRuns = 0
       while (extraRuns < 2 && {
         val best = timed.minBy(_._1)

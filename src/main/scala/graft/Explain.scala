@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan/timing diagnostics: `runMain graft.Explain <sfDir> <query...>`
   * prints each query's formatted physical plan and two consecutive
@@ -9,22 +8,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same native-expression registry as the Bench/Verify sessions,
-      // so captured plans match what the bench executes (r22: the
-      // gram_hash sites have no per-query registerIn fallback)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATS=1 reproduces the bench/gate session shape
-    // (stats-bearing catalog tables + CBO) for A/B plan comparison.
-    if (sys.env.get("SPARK_GRAFT_STATS").contains("1"))
-      Tables.registerWithStats(spark, sfDir)
+    val spark = SessionTuning.localSession()
+    // the Bench/Verify table shape (stats + CBO): the printed plans are
+    // the ones they run
+    Tables.registerWithStats(spark, sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       println(s"===== $name =====")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase-split measurement for one registered query — the drift
   * playbook from the r14 `ns_sim_ivfpq` root-cause, packaged as a tool
   * so the next wrong-way bench mover gets measured instead of guessed
@@ -31,15 +29,7 @@ object PhaseSplit {
     val runs = if (args.length > 2) args(2).toInt else 5
     val fn = SparkEntry.queryFn(name).getOrElse(
       sys.error(s"unknown query: $name"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.localSession()
     Tables.registerWithStats(spark, sfDir)
 
     def jit: Long = {

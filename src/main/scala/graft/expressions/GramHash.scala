@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -27,7 +25,9 @@ import org.apache.spark.sql.types._
   * `h = seed; for each non-null element e in window: h = hash(e, h)`
   * (null elements leave the accumulator unchanged). Elements may be
   * long, int, or string. `len` and `seed` must be foldable literals;
-  * windows are clamped to the array bounds.
+  * windows past the array end are clamped like `slice`'s. A negative
+  * `pos` has no `slice` twin (`slice` rejects start <= 0), so it fails
+  * the query instead of hashing a wrong window.
   */
 case class GramHash(arr: Expression, pos: Expression, len: Expression,
     seed: Expression) extends Expression {
@@ -67,9 +67,10 @@ case class GramHash(arr: Expression, pos: Expression, len: Expression,
     if (p == null) return null
     val ad = a.asInstanceOf[ArrayData]
     val start = p.asInstanceOf[Int]
+    if (start < 0) throw GramHash.negativePos(start)
     val end = math.min(start.toLong + lenVal, ad.numElements().toLong).toInt
     var h = seedVal
-    var i = math.max(start, 0)
+    var i = start
     while (i < end) {
       if (!ad.isNullAt(i)) h = elemType match {
         case LongType =>
@@ -92,6 +93,7 @@ case class GramHash(arr: Expression, pos: Expression, len: Expression,
     val a = ctx.freshName("a")
     val i = ctx.freshName("i")
     val end = ctx.freshName("end")
+    val helper = classOf[GramHash].getName
     val upd = elemType match {
       case LongType => s"${ev.value} = $xxh.hashLong($a.getLong($i), ${ev.value});"
       case IntegerType => s"${ev.value} = $xxh.hashInt($a.getInt($i), ${ev.value});"
@@ -106,10 +108,11 @@ case class GramHash(arr: Expression, pos: Expression, len: Expression,
         boolean ${ev.isNull} = ${arrGen.isNull} || ${posGen.isNull};
         long ${ev.value} = ${seedVal}L;
         if (!${ev.isNull}) {
+          if (${posGen.value} < 0) throw $helper.negativePos(${posGen.value});
           org.apache.spark.sql.catalyst.util.ArrayData $a = ${arrGen.value};
           int $end = (int) Math.min((long) ${posGen.value} + ${lenVal}L,
             (long) $a.numElements());
-          for (int $i = Math.max(${posGen.value}, 0); $i < $end; $i++) {
+          for (int $i = ${posGen.value}; $i < $end; $i++) {
             if (!$a.isNullAt($i)) { $upd }
           }
         }
@@ -134,14 +137,13 @@ object GramHash {
     "gram_hash(arr, pos, len, seed) - xxhash64 of arr[pos, pos+len) without slicing.",
     "")
 
+  /** Public static — thrown from generated code too. */
+  def negativePos(pos: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"gram_hash pos must be >= 0, got $pos")
+
   val builder: Seq[Expression] => Expression = {
     case Seq(a, p, l, s) => GramHash(a, p, l, s)
     case other => throw new IllegalArgumentException(
       s"gram_hash expects 4 arguments, got ${other.size}")
   }
-
-  /** Idempotent per-session registration. */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("gram_hash"), info, builder)
 }

@@ -2,9 +2,7 @@ package graft.expressions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -98,8 +96,4 @@ object KMinValues {
     case other => throw new IllegalArgumentException(
       s"kmv_sketch expects (expr, k), got ${other.size} arguments")
   }
-
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("kmv_sketch"), info, builder)
 }

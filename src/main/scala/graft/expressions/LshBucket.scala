@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -137,11 +135,4 @@ object LshBucket {
     case other => throw new IllegalArgumentException(
       s"lsh_bucket expects 1 argument, got ${other.size}")
   }
-
-  /** Idempotent per-session registration (same convention as
-    * [[ScaledDotProduct.registerIn]]).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lsh_bucket"), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -138,10 +136,4 @@ object MaxSimScore {
     case other => throw new IllegalArgumentException(
       s"maxsim_score expects 2 arguments, got ${other.size}")
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[ScaledDotProduct.registerIn]]). */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("maxsim_score"), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -94,12 +92,4 @@ object ScaledDotProduct {
     case other => throw new IllegalArgumentException(
       s"scaled_dot expects 2 arguments, got ${other.size}")
   }
-
-  /** Idempotent per-session registration — makes `scaled_dot` available
-    * to `expr`/SQL regardless of whether the session was built with
-    * [[graft.plans.GraftExtensions]] (e.g. a driver-provided session).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("scaled_dot"), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -108,11 +106,4 @@ object SortedOverlap {
     case other => throw new IllegalArgumentException(
       s"sorted_overlap expects 2 arguments, got ${other.size}")
   }
-
-  /** Idempotent per-session registration (the
-    * [[ScaledDotProduct.registerIn]] convention).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sorted_overlap"), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,11 +125,4 @@ object SquaredL2 {
     case other => throw new IllegalArgumentException(
       s"sq_l2 expects 2 or 3 arguments, got ${other.size}")
   }
-
-  /** Idempotent per-session registration (same contract as
-    * [[ScaledDotProduct.registerIn]]).
-    */
-  def registerIn(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sq_l2"), info, builder)
 }

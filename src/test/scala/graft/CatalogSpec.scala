@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
 import graft.queries._
 
 /** Catalog hygiene: the driver contract silently degrades if query
@@ -98,5 +101,38 @@ class CatalogSpec extends SparkSpec {
 
   test("entry (driver smoke) returns rows") {
     assert(SparkEntry.entry(spark).collect().nonEmpty)
+  }
+
+  test("a session without the native functions still runs queries through the contract") {
+    val natives = Seq("scaled_dot", "maxsim_score", "kmv_sketch", "sq_l2",
+      "lsh_bucket", "sorted_overlap", "gram_hash")
+    val bare = spark.newSession()
+    natives.foreach(n =>
+      bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier(n)))
+    assert(natives.forall(n => !bare.catalog.functionExists(n)))
+    for (name <- Seq("ns_sim_maxsim", "ns_dedup_exact_substr")) {
+      def rows(s: SparkSession) =
+        SparkEntry.queries(name)(s, sfDir).collect().map(_.toString).sorted.toSeq
+      val got = rows(bare)
+      assert(got.nonEmpty, s"$name returned no rows")
+      assert(got == rows(spark), s"$name differs on the bare session")
+    }
+    assert(natives.forall(bare.catalog.functionExists))
+  }
+
+  test("source guard: one session builder and one native-function table") {
+    val code = SourceCode.under("src/main/scala")
+      .map { case (p, c) => p.toString -> c }
+    def sites(pattern: String): Map[String, Int] = code
+      .map { case (p, c) => p -> pattern.r.findAllIn(c).size }
+      .filter(_._2 > 0).toMap
+    assert(sites("""SparkSession\s*\.\s*builder\b""") == Map(
+      "src/main/scala/graft/SessionTuning.scala" -> 1,
+      "src/main/scala/graft/sources/PersistentCatalog.scala" -> 1),
+      "build sessions with SessionTuning.localSession (or, for the " +
+        "metastore-backed catalog, PersistentCatalog.sessionBuilder)")
+    assert(sites("""\bregisterFunction\b""") == Map(
+      "src/main/scala/graft/plans/GraftExtensions.scala" -> 1),
+      "register native expressions in GraftExtensions.natives")
   }
 }

@@ -285,4 +285,14 @@ class EngineSpec extends SparkSpec {
     // no env, no explicit -> defaults
     assert(EngineConfig.resolve(env = Map.empty) == EngineConfig())
   }
+
+  test("tmpfs scratch only on a writable /dev/shm with enough free space") {
+    import SessionTuning.{MinShmBytes, shmScratch}
+    assert(shmScratch(isDir = true, writable = true, MinShmBytes).isDefined)
+    // Docker's default 64 MB /dev/shm
+    assert(shmScratch(isDir = true, writable = true, 64L << 20).isEmpty)
+    assert(shmScratch(isDir = true, writable = true, MinShmBytes - 1).isEmpty)
+    assert(shmScratch(isDir = true, writable = false, MinShmBytes).isEmpty)
+    assert(shmScratch(isDir = false, writable = true, MinShmBytes).isEmpty)
+  }
 }

@@ -53,16 +53,19 @@ class GlobalWindowAuditSpec extends SparkSpec {
     */
   private val RowBound = 1200L
 
+  /** `Window.orderBy` sites in the code (not the comments) of the two
+    * query files.
+    */
+  private val GlobalWindowSites = 25
+
   test("source guard: global-window site count is maintained with the audit") {
     val src = Seq(
       "src/main/scala/graft/queries/NorthStarQueries.scala",
       "src/main/scala/graft/queries/CurationQueries.scala")
-      .map(p => new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p))))
-      .mkString
+      .map(SourceCode.of).mkString
     val n = "Window\\.orderBy".r.findAllIn(src).size
-    assert(n == 25,
-      s"found $n Window.orderBy sites (expected 25) — a global-window " +
+    assert(n == GlobalWindowSites,
+      s"found $n Window.orderBy sites (expected $GlobalWindowSites) — a global-window " +
         "site was added or removed: update GlobalWindowAuditSpec's " +
         "auditedQueries list and re-verify the new site's input is bounded")
   }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.expressions.GramHash
 
@@ -65,5 +67,19 @@ class GramHashSpec extends SparkSpec {
       .collect()(0)
     assert(q.isNullAt(0), "null array must yield null")
     assert(q.getLong(1) == q.getLong(2), "empty window == hash of empty slice")
+  }
+
+  test("negative pos fails in eval and in generated code instead of clamping") {
+    val eval = intercept[IllegalArgumentException] {
+      GramHash(Literal.create(Seq(1L, 2L, 3L), ArrayType(LongType)), Literal(-1),
+        Literal(2), Literal(GramHash.DefaultSeed)).eval()
+    }
+    assert(eval.getMessage.contains("pos must be >= 0"))
+    // pos from a column: not folded, so it reaches the generated code
+    val q = spark.range(3).selectExpr(
+      s"gram_hash(array(1L, 2L, 3L), cast(id as int) - 1, 2, ${GramHash.DefaultSeed}L)")
+    val err = intercept[Exception](q.collect())
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("pos must be >= 0")), err)
   }
 }
